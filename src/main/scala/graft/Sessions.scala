@@ -17,8 +17,27 @@ import org.apache.spark.sql.SparkSession
   * UNTOUCHED (the builder is never consulted) and only builds when no
   * session is live — and releases through [[release]], which stops ONLY a
   * session the entrypoint itself created.
+  *
+  * A session [[acquire]] builds also gets a generated-class cache big
+  * enough for graft's plan working set ([[CodegenCacheEntries]]); a joined
+  * session keeps whatever cache its host built.
   */
 object Sessions {
+
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`) for every session graft builds.
+    *
+    * One batch of the SRI star-schema load compiles 196 distinct classes,
+    * one batch of document curation 188. Spark's default of 100 is split
+    * over the cache's 4 segments (25 each), so each batch evicted the
+    * classes the next batch reuses and had them compiled and JIT-compiled
+    * again. 1000 leaves 250 per segment against about 50 in use.
+    *
+    * The key is a static SQL conf: Spark's code generator reads it once per
+    * JVM, when it first initialises, so it only takes effect on the builder
+    * before `getOrCreate`, never on a running session's conf.
+    */
+  val CodegenCacheEntries = 1000
 
   /** The live session of this JVM, if any (active on this thread or
     * registered as the JVM-wide default).
@@ -33,13 +52,15 @@ object Sessions {
   /** Acquire a session: returns `(session, owned)`. If a session is live,
     * it is returned AS IS — not stopped later, and not reconfigured (the
     * builder's configs are deliberately ignored; a guest does not edit
-    * its host's conf). Otherwise the builder creates one and the caller
-    * owns it.
+    * its host's conf). Otherwise the builder creates one, with
+    * [[CodegenCacheEntries]] cache entries, and the caller owns it.
     */
   def acquire(builder: SparkSession.Builder): (SparkSession, Boolean) =
     liveSession match {
       case Some(s) => (s, false)
-      case None => (builder.getOrCreate(), true)
+      case None =>
+        val sized = builder.config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+        (sized.getOrCreate(), true)
     }
 
   /** Stop `spark` iff `owned`. A joined (host-owned) session is left

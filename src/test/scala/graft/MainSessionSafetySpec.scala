@@ -21,6 +21,8 @@ class MainSessionSafetySpec extends SparkTestBase {
     // when a live session exists, so the host conf stays untouched
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4",
       s"$label reconfigured the host session's shuffle partitions")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      Sessions.CodegenCacheEntries.toString, s"$label reconfigured the host session's codegen cache size")
   }
 
   test("CurateMain.main twice leaves the host session usable") {

@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared session per suite; config mirrors Verify/Bench. */
+/** One shared session per suite; config mirrors Verify/Bench. Built through
+  * [[Sessions.acquire]] so the test JVM has the same codegen cache as
+  * every graft main.
+  */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
 }
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val (s, _) = Sessions.acquire(SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
@@ -18,8 +21,7 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
     s.sparkContext.setLogLevel("WARN")
     s
   }
